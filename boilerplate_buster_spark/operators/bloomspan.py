@@ -50,6 +50,8 @@ from boilerplate_buster_spark.core.expand import (
     WindowExhausted,
     expand_windowed,
 )
+from boilerplate_buster_spark.session import local_frame
+
 RESULT_SCHEMA = T.StructType(
     [
         T.StructField("phrase", T.StringType(), False),
@@ -106,7 +108,7 @@ def packed_word_bitmap(
         b = r["bit"]
         packed[b >> 6] |= np.uint64(1) << np.uint64(b & 63)
     vals = [int(v) for v in packed.view(np.int64)]
-    return spark.createDataFrame([(vals,)], "bf array<bigint>")
+    return local_frame(spark, [(vals,)], "bf array<bigint>")
 
 
 def _bitmap_probe(x: str, bits: int = BITMAP_BITS_DEFAULT) -> str:
@@ -466,7 +468,7 @@ def mine(
         def resolve_words(hashes: set) -> dict:
             if not hashes:
                 return {}
-            hdf = spark.createDataFrame([(h,) for h in hashes], "h bigint")
+            hdf = local_frame(spark, [(h,) for h in hashes], "h bigint")
             return {
                 r["h"]: r["word"]
                 for r in fw_cached.join(F.broadcast(hdf), "h").collect()
@@ -505,10 +507,11 @@ def mine(
         if stats is not None:
             stats.update(phrases_total=0, phrases_6plus=0)
         return []
-    cands = spark.createDataFrame(
+    cands = local_frame(
+        spark,
         [(r["cid"], r["gram"], r["support"]) for r in cand_rows],
         "cid int, gram string, support long",
-    ).cache()
+    )
     if strategy == "auto":
         # support (distinct docs) lower-bounds occurrences; good enough to
         # pick the execution strategy
@@ -550,7 +553,6 @@ def mine(
             except WindowExhausted:
                 window *= 2
     finally:
-        cands.unpersist()
         if fw_cached is not None:
             fw_cached.unpersist()
 
@@ -691,8 +693,8 @@ def _mine_distributed(
     )
     if thr_by_cid:
         thr_df = F.broadcast(
-            spark.createDataFrame(
-                [(cid, thr) for cid, thr in thr_by_cid.items()], "cid int, thr bigint"
+            local_frame(
+                spark, [(cid, thr) for cid, thr in thr_by_cid.items()], "cid int, thr bigint"
             )
         )
         agg = agg.join(thr_df, "cid", "left").filter(
@@ -740,7 +742,8 @@ def _mine_distributed(
 
     # ---- flag FINAL occurrences (per-cid final chain hash); only the c
     # columns of lengths that actually occur are read from cache ----
-    fin_df = spark.createDataFrame(
+    fin_df = local_frame(
+        spark,
         [(cid, len(st["tokens"]), st["h"]) for cid, st in state.items()],
         "cid int, flen int, fin_h long",
     )
@@ -874,7 +877,7 @@ def phrases_to_df(spark: SparkSession, phrases: list[WCandidate]) -> DataFrame:
             ex = sorted({str(o.doc_id) for o in p.occs})[:2]
         data.append((p.text, p.support, len(p.tokens), ex))
     data.sort(key=lambda r: (-r[1] * r[2], -r[1], r[0]))
-    return spark.createDataFrame(data, RESULT_SCHEMA)
+    return local_frame(spark, data, RESULT_SCHEMA)
 
 
 def mine_df(spark: SparkSession, docs: DataFrame, **kw) -> DataFrame:

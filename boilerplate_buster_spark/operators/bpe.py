@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from boilerplate_buster_spark.session import local_frame
+
 
 def _q(s: str) -> str:
     """Render a string literal (both dialects quote ' by doubling)."""
@@ -271,9 +273,7 @@ def train_bpe(
 
 
 def merges_df(spark: SparkSession, merges: list[tuple[int, str, str, int]]):
-    return spark.createDataFrame(
-        merges, "rank int, lhs string, rhs string, pair_count long"
-    )
+    return local_frame(spark, merges, "rank int, lhs string, rhs string, pair_count long")
 
 
 def bpe_encode(

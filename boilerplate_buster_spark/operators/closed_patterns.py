@@ -64,6 +64,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from boilerplate_buster_spark.operators.bloomspan import _gramhash_sql
+from boilerplate_buster_spark.session import local_frame
 
 CLOSED_SCHEMA = T.StructType(
     [
@@ -130,7 +131,7 @@ def _gate_bitmap(spark: SparkSession, hashes: list[int]) -> tuple[int, DataFrame
         b = h % bits
         packed[b >> 6] |= np.uint64(1) << np.uint64(b & 63)
     vals = [int(v) for v in packed.view(np.int64)]
-    return bits, spark.createDataFrame([(vals,)], "_bf array<bigint>")
+    return bits, local_frame(spark, [(vals,)], "_bf array<bigint>")
 
 
 def _pos_expr(k: int, gate_bits: int | None) -> str:
@@ -255,7 +256,7 @@ def closed_contiguous_patterns(
         cur.unpersist()
         txt.unpersist()
     out_rows.sort(key=lambda r: (-r[1] * r[2], -r[1], r[0]))
-    return spark.createDataFrame(out_rows, CLOSED_SCHEMA)
+    return local_frame(spark, out_rows, CLOSED_SCHEMA)
 
 
 # aliases mirroring the reference's algorithm names
@@ -367,4 +368,4 @@ def prefixspan_patterns(
         cur.unpersist()
         txt.unpersist()
     out_rows.sort(key=lambda r: (-r[1] * r[2], -r[1], r[0]))
-    return spark.createDataFrame(out_rows, CLOSED_SCHEMA)
+    return local_frame(spark, out_rows, CLOSED_SCHEMA)

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from boilerplate_buster_spark.functions.ngrams import explode_ngrams
+from boilerplate_buster_spark.session import local_frame
 
 
 def word_doc_freq(
@@ -103,7 +104,7 @@ def exact_percentiles(docs, value_expr: str, ps: list[int]):
                 value = val
                 break
         out.append((p, value))
-    return spark.createDataFrame(out, "p long, value long")
+    return local_frame(spark, out, "p long, value long")
 
 
 def corpus_composition(

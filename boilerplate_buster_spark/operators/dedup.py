@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from boilerplate_buster_spark.operators.text_stats import h60
+from boilerplate_buster_spark.session import local_frame
 
 DEFAULT_K = 12  # minhash functions
 DEFAULT_BANDS = 4  # -> rows-per-band = K/BANDS = 3
@@ -290,8 +291,8 @@ def duplicate_clusters(
                 parent[max(ra, rb)] = min(ra, rb)
         out = [(n, find(n)) for n in parent]
         spark = pairs.sparkSession
-        return spark.createDataFrame(
-            out, schema=pairs.select(F.col("doc_a").alias("doc_id"),
+        return local_frame(
+            spark, out, pairs.select(F.col("doc_a").alias("doc_id"),
                                      F.col("doc_a").alias("cluster_id")).schema
         )
     labels = edges.select("src").distinct().select(
@@ -816,12 +817,10 @@ def lsh_tuning_eval(
         )
         .filter(F.col("jac_e6") >= min_t)
     )
-    cfg = spark.createDataFrame(
-        [(int(ck), int(cb)) for ck, cb in configs], "k int, bands int"
+    cfg = local_frame(
+        spark, [(int(ck), int(cb)) for ck, cb in configs], "k int, bands int"
     )
-    th = spark.createDataFrame(
-        [(int(t),) for t in thresholds_e6], "threshold_e6 long"
-    )
+    th = local_frame(spark, [(int(t),) for t in thresholds_e6], "threshold_e6 long")
     hit = (
         truth.crossJoin(F.broadcast(cfg))
         .join(pairs.withColumn("_c", F.lit(1)), ["k", "bands", "doc_a", "doc_b"], "left")

@@ -63,8 +63,13 @@ def with_text_repr(pages: DataFrame) -> DataFrame:
     """pages + text_repr: parsed html blocks, else the `text` column.
 
     The html parse is a pandas-UDF (Arrow batches); rows with html IS NULL
-    never enter Python (coalesce short-circuits on the JVM side).
+    never enter Python.  When no page carries html (one cheap limit-1
+    probe) the plan holds no Python stage at all: an ArrowEvalPython stage
+    starts a worker on every partition even when its filter passes no row.
     """
+    html_rows = pages.filter(F.col("html").isNotNull())
+    if html_rows.isEmpty():
+        return pages.withColumn("text_repr", F.col("text"))
 
     @F.pandas_udf(T.StringType())
     def parse_html(html: pd.Series) -> pd.Series:
@@ -73,45 +78,11 @@ def with_text_repr(pages: DataFrame) -> DataFrame:
     # Spark does NOT short-circuit UDFs inside when(): a single withColumn
     # would push every row through Python even when html IS NULL.  Split the
     # frame instead - the null branch never leaves the JVM.
-    with_html = pages.filter(F.col("html").isNotNull()).withColumn(
-        "text_repr", parse_html(F.col("html"))
-    )
+    with_html = html_rows.withColumn("text_repr", parse_html(F.col("html")))
     text_only = pages.filter(F.col("html").isNull()).withColumn(
         "text_repr", F.col("text")
     )
     return with_html.unionByName(text_only)
-
-
-def mine_boilerplate(
-    spark: SparkSession,
-    pages: DataFrame,
-    min_docs: int,
-    ngrams: int,
-    min_l: int | None = None,
-    **mine_kw,
-) -> list[str]:
-    """Pass 1 standalone: corpus-global boilerplate phrase list (small,
-    driver-side).  `extract_main_content` inlines this so the parsed text
-    cache survives into pass 2; use this entry when only the phrase list is
-    needed."""
-    from pyspark import StorageLevel
-
-    # cache the STRING text representation (html parse runs once); token
-    # ARRAYS are recomputed per pass - array<string> columnar cache reads
-    # are far slower than split()-on-scan (see bloomspan.mine note)
-    text_repr = with_text_repr(pages).select("url", "text_repr").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
-        docs = text_repr.select(
-            F.col("url").alias("doc_id"), tokens("text_repr").alias("tokens")
-        )
-        phrases = bloomspan.mine(
-            spark, docs, min_docs=min_docs, ngrams=ngrams, min_l=min_l, **mine_kw
-        )
-        return [p.text for p in phrases]
-    finally:
-        text_repr.unpersist()
 
 
 def strip_text_pass(

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from boilerplate_buster_spark.session import local_frame
+
 
 def _sep_regex_sql(sep: str) -> str:
     """SQL string literal holding `sep` as a LITERAL Java regex: split()'s
@@ -246,9 +248,7 @@ def contamination_flags(
     t = tokens_col
     spark = docs.sparkSession
     # set semantics: duplicate benchmark grams must not multiply matches
-    bench = spark.createDataFrame(
-        [(g,) for g in sorted(set(benchmark_grams))], "gram string"
-    )
+    bench = local_frame(spark, [(g,) for g in sorted(set(benchmark_grams))], "gram string")
     grams = (
         f"transform(slice(sequence(1, greatest(size({t}) - {ngram} + 1, 1)), "
         f"1, greatest(size({t}) - {ngram} + 1, 0)), "

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from boilerplate_buster_spark.session import local_frame
+
 
 def _bigram_expr(tokens_col: str) -> str:
     t = tokens_col
@@ -372,9 +374,7 @@ def ccnet_buckets(
             return h[-1][0]
 
         rows.append((lang, thr((n + 2) // 3), thr((2 * n + 2) // 3)))
-    thresholds = spark.createDataFrame(
-        rows, f"{lang_col} string, t_lo long, t_hi long"
-    )
+    thresholds = local_frame(spark, rows, f"{lang_col} string, t_lo long, t_hi long")
     return b.join(F.broadcast(thresholds), lang_col).select(
         id_col,
         lang_col,

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from boilerplate_buster_spark.operators.text_stats import h60
+from boilerplate_buster_spark.session import local_frame
 
 
 def weighted_corpus_mix(
@@ -128,7 +129,8 @@ def stratified_sample(
             t = 1000000
         rows.append((s, t))
     th = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             rows,
             T.StructType(
                 [
@@ -189,7 +191,7 @@ def pack_sequences(
         offsets.append((r["b"], running))
         running += r["bn"]
     off_df = F.broadcast(
-        spark.createDataFrame(offsets, "b long, boff long")
+        local_frame(spark, offsets, "b long, boff long")
     )
     w = (
         Window.partitionBy("b")

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from boilerplate_buster_spark.operators.text_stats import h60
+from boilerplate_buster_spark.session import local_frame
 
 _H_BITS = 60
 
@@ -113,7 +114,7 @@ def cms_estimates(
     spark = values.sparkSession
     sketch = cms_sketch(values, col, d, w)
     qterms = sorted(set(terms))
-    tdf = spark.createDataFrame([(t,) for t in qterms], "term string")
+    tdf = local_frame(spark, [(t,) for t in qterms], "term string")
     parts = []
     for j in range(int(d)):
         hj = h60(f"concat(term, '#cms{j}')")
@@ -180,7 +181,7 @@ def bloom_membership(
     spark = values.sparkSession
     bits = bloom_bits(values, col, k, m)
     qterms = sorted(set(terms))
-    tdf = spark.createDataFrame([(t,) for t in qterms], "term string")
+    tdf = local_frame(spark, [(t,) for t in qterms], "term string")
     parts = []
     for j in range(int(k)):
         hj = h60(f"concat(term, '#bf{j}')")

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from boilerplate_buster_spark.session import local_frame
+
 # RE2-safe (no lookaround/backrefs), identical semantics in Java regex
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+"
 IPV4_RE = r"[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}"
@@ -81,9 +83,7 @@ def url_blocklist_filter(
     never shuffled.  EXACT match on the registrable domain (see
     url_features), the granularity public blocklists use."""
     spark = docs.sparkSession
-    bl = spark.createDataFrame(
-        [(d,) for d in sorted(set(blocked_domains))], "domain string"
-    )
+    bl = local_frame(spark, [(d,) for d in sorted(set(blocked_domains))], "domain string")
     feats = url_features(docs.select(url_col), url_col).select(url_col, "domain")
     keep = feats.join(F.broadcast(bl), "domain", "left_anti").select(url_col)
     return docs.join(F.broadcast(keep), url_col, "left_semi")

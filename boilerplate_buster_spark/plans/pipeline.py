@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from boilerplate_buster_spark.operators import bloomspan
 from boilerplate_buster_spark.operators.extraction import strip_pass, with_text_repr
 from boilerplate_buster_spark.functions.tokenizer import tokens
+from boilerplate_buster_spark.session import local_frame
 
 
 class CheckpointStore:
@@ -156,7 +157,8 @@ class IcebergCheckpointStore:
     def commit(self, stage: str, tables: dict[str, str], metrics: dict) -> None:
         snap = self.last_snapshot()
         sid = (snap["snapshot_id"] if snap else 0) + 1
-        row = self.spark.createDataFrame(
+        row = local_frame(
+            self.spark,
             [(sid, time.time(), stage, json.dumps(tables), json.dumps(metrics))],
             "snapshot_id bigint, ts double, stage string, tables string, metrics string",
         )

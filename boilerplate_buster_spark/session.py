@@ -15,7 +15,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def get_spark(
@@ -73,11 +74,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # let the planner pick shuffled-hash join when its size conditions
-        # hold (sort-merge stays the fallback): avoids both sort passes on
-        # moderate join sides - the optimization guide's recommended
-        # baseline for batch ETL at any scale, not a local-mode tweak; the
-        # OOM risk window is the same build-side-fits check AQE enforces
+        # let the planner pick shuffled-hash join (sort-merge stays the
+        # fallback): avoids both sort passes on moderate join sides.  The
+        # gate is an optimizer ESTIMATE (build side < broadcast threshold x
+        # shuffle partitions, >= 3x smaller than the other side) and the
+        # build side does NOT spill: a misestimated or skewed one can OOM
         .config("spark.sql.join.preferSortMergeJoin", "false")
     )
     for k, v in (extra_conf or {}).items():
@@ -103,3 +104,22 @@ def iceberg_conf(
         f"spark.sql.catalog.{catalog}.type": catalog_type,
         f"spark.sql.catalog.{catalog}.warehouse": warehouse,
     }
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """DataFrame of driver-side `rows` (tuples in `schema` field order) as a
+    JVM-side LocalTableScan: reading it starts no Python task, unlike the
+    PythonRDD scan of ``spark.createDataFrame(<list>)`` (~0.2 CPU-s per
+    task).  pyarrow, not pandas, which turns a NULL-bearing bigint column
+    into float64 and loses 64-bit hashes.  numpy scalars are accepted."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    nulls = [f.name for f in struct.fields if not f.nullable and table[f.name].null_count]
+    if nulls:  # Arrow does not enforce a schema's non-null fields
+        raise ValueError(f"NULL in non-nullable field(s) {nulls}")
+    return spark.createDataFrame(table, struct)

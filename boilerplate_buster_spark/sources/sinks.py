@@ -17,6 +17,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from boilerplate_buster_spark.session import local_frame
+
 
 def results_csv(df: DataFrame, path: str | None = None) -> str:
     """Canonical results CSV from a (phrase, freq, length, example_docs)
@@ -81,7 +83,7 @@ def import_spmf(spark: SparkSession, path: str, dict_path: str | None = None) ->
             items = [t for t in seq.split() if t not in ("-1", "-2")]
             words = [id_to_word.get(t, t) for t in items]
             rows.append((" ".join(words), int(sup.strip()), len(words)))
-    return spark.createDataFrame(rows, "phrase string, freq long, length int")
+    return local_frame(spark, rows, "phrase string, freq long, length int")
 
 
 def run_spmf(

@@ -1,7 +1,8 @@
 """Randomized cross-check of the pure-Python core vs the actual reference
 binary, built on demand from /root/reference sources into /tmp.
 
-Skipped entirely when the binary can't be built (no g++).  Deterministic
+Skipped entirely when the binary can't be built; the skip message names the
+cause (reference sources absent, no g++, or a failed build).  Deterministic
 projection compared: the (phrase, freq, length) set.  BloomSpan is compared on
 template-structured corpora only (its unstable expansion tie-break makes
 adversarially tie-heavy random corpora legitimately diverge - SURVEY.md
@@ -26,11 +27,14 @@ REF_SRC = pathlib.Path("/root/reference/corpus-miner")
 BIN = pathlib.Path("/tmp/refbuild/corpus_miner")
 
 
-def _ensure_binary() -> pathlib.Path | None:
+def _ensure_binary() -> pathlib.Path | str:
+    """The reference binary, or why it can't be built."""
     if BIN.exists():
         return BIN
-    if shutil.which("g++") is None or not REF_SRC.exists():
-        return None
+    if not REF_SRC.exists():
+        return f"reference sources not found at {REF_SRC}"
+    if shutil.which("g++") is None:
+        return "no g++"
     BIN.parent.mkdir(parents=True, exist_ok=True)
     srcs = (
         list(REF_SRC.glob("*.cpp"))
@@ -41,15 +45,15 @@ def _ensure_binary() -> pathlib.Path | None:
     cmd = ["g++", "-std=c++20", "-O2", "-fopenmp", f"-I{REF_SRC}", *map(str, srcs), "-o", str(BIN)]
     try:
         subprocess.run(cmd, check=True, capture_output=True, timeout=300)
-    except Exception:
-        return None
-    return BIN if BIN.exists() else None
+    except Exception as e:
+        return f"reference build failed: {type(e).__name__}"
+    return BIN if BIN.exists() else "reference build produced no binary"
 
 
 def run_reference(corpus_dir: pathlib.Path, algo: str, min_docs: int, ngrams: int, workdir: pathlib.Path):
     binary = _ensure_binary()
-    if binary is None:
-        pytest.skip("reference binary unavailable (no g++)")
+    if isinstance(binary, str):
+        pytest.skip(f"reference binary unavailable ({binary})")
     subprocess.run(
         [str(binary), str(corpus_dir), "--algo", algo, "--n", str(min_docs),
          "--ngrams", str(ngrams), "--in-mem"],
